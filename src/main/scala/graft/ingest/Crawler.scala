@@ -50,13 +50,20 @@ object Crawler {
       spark: SparkSession,
       rawRoot: String,
       table: String): CrawlReport = {
-    // Schema inference over the gzipped JSON zone — partition columns
-    // (source, ingestion_date) come from the directory layout.
-    val inferred = spark.read
-      .option("compression", "gzip")
-      .json(rawRoot)
-    val payloadCols =
-      inferred.schema.filterNot(f => Seq("source", "ingestion_date").contains(f.name))
+    // Schema inference over the raw zone's lines (gzip is detected from
+    // the `.json.gz` extension). Inferring from the text scan's lines runs
+    // the same JsonInferSchema as `spark.read.json(rawRoot)`, but over the
+    // one file listing the text read already made: the file source would
+    // re-list every page it found through a second file index, and past
+    // `parallelPartitionDiscovery.threshold` paths that is a Spark job
+    // with one task per page. The partition columns (source,
+    // ingestion_date) come from the directory layout, not the payload.
+    import spark.implicits._
+    val lines = spark.read.text(rawRoot).select("value").as[String]
+    val payloadCols = spark.read.json(lines).schema
+      .filterNot(f => Seq("source", "ingestion_date").contains(f.name))
+    require(payloadCols.nonEmpty,
+      s"crawl: no JSON pages under $rawRoot to infer a schema from")
 
     val exists = spark.catalog.tableExists(table)
     var added = Seq.empty[String]
@@ -93,7 +100,10 @@ object Crawler {
         Map(DeprecatedProp -> allDeprecated.mkString(",")))
     else if (tableProps(spark, table).contains(DeprecatedProp))
       setTableProps(spark, table, Map.empty, remove = Seq(DeprecatedProp))
-    val partitions = spark.sql(s"SHOW PARTITIONS $table").count()
+    // the catalog already holds the partitions MSCK REPAIR registered:
+    // count them there instead of running a job over SHOW PARTITIONS rows
+    val partitions = spark.sessionState.catalog.listPartitions(
+      spark.sessionState.sqlParser.parseTableIdentifier(table)).size.toLong
     CrawlReport(table, added, deprecated, partitions)
   }
 

@@ -61,11 +61,15 @@ object RawWriter {
     val failed = spark.sparkContext.longAccumulator("failures_total")
     val serConf = new SerializableConf(spark.sparkContext.hadoopConfiguration)
 
-    // Partition by endpoint: the analog of one queue per endpoint
-    // (stack.py:66-80) — per-endpoint ordering/isolation of work, and at
-    // scale a natural unit for rate limiting against the upstream API.
+    // Spread the work over every write task by hashing the page key. The
+    // reference caps concurrency with the workers' reserved concurrency
+    // (stack.py:131-135), which maps to the task count, and its QPS sleep
+    // is per worker per fetch (worker.py:223-229, SURVEY I2/I5): neither
+    // needs one task per endpoint, which would cap ingest at as many
+    // cores as there are endpoints on any cluster.
+    import org.apache.spark.sql.functions.col
     work.repartition(work.sparkSession.sessionState.conf.numShufflePartitions,
-        org.apache.spark.sql.functions.col("endpoint"))
+        col("endpoint"), col("ingestionDate"), col("page"))
       .foreachPartition { (items: Iterator[WorkItem]) =>
         val conf = serConf.value
         val fs = new Path(rawRoot).getFileSystem(conf)

@@ -54,6 +54,12 @@ object ReferenceQueries {
 /** E1 analog (SURVEY §3): execute SQL under a role, results to the
   * role's own output prefix (the per-role Athena workgroup sink, I13). */
 object QueryRunner {
+  /** Runs `sql` as `role`, writes the result to
+    * `<outRoot>/<role>/<queryName>` and returns the rows written, read
+    * back from that sink — as Athena's GetQueryResults serves the
+    * workgroup's output location. Returning the secured query instead
+    * would scan the raw zone a second time on every collect, and could
+    * return rows other than the ones written. */
   def run(
       spark: SparkSession,
       role: Rbac.Role,
@@ -64,9 +70,10 @@ object QueryRunner {
       stringResults: Boolean = false): DataFrame = {
     val secured = Rbac.runAs(spark, role, table, sql)
     val df = if (stringResults) asStrings(secured) else secured
-    df.coalesce(1).write.mode("overwrite")
-      .parquet(s"$outRoot/${role.name}/$queryName")
-    df
+    val sink = s"$outRoot/${role.name}/$queryName"
+    df.coalesce(1).write.mode("overwrite").parquet(sink)
+    // the schema written is known: reading with it skips a footer job
+    spark.read.schema(df.schema).parquet(sink)
   }
 
   /** Athena result-model parity mode: the reference reads results through

@@ -12,8 +12,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - column security fails loudly (referencing `items` via the core view
   *    throws AnalysisException, matching "query fails" semantics of
   *    comprehensive_rbac_demo.py:191-200).
-  * Catalyst pushes the view's filter into the scan, so the row filter also
-  * prunes partitions on `source` — governance costs nothing at scale.
+  * Catalyst pushes the view's filter into the scan as a data filter. The
+  * core role's filter is on the payload column `endpoint`, not on the
+  * partition column `source`, so it prunes no partitions: a core request
+  * lists and reads every raw page, as a pii request does, and filters
+  * rows as it parses them.
   */
 object Rbac {
   final case class Role(

@@ -47,6 +47,33 @@ class ReferenceQueriesSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/pii/total").collect()(0).getLong(0) == 80L)
   }
 
+  test("query runner returns the rows its role wrote, read from the sink") {
+    val out = tmpDir("results_sink")
+    for (role <- Seq(Rbac.core, Rbac.pii)) {
+      val sink = s"$out/${role.name}/by_endpoint"
+      val sql = ReferenceQueries.filesByEndpoint(setup)
+      val got = QueryRunner.run(spark, role, setup, "by_endpoint", sql, out)
+      // collecting the result reads the sink, not the raw zone again
+      val files = got.inputFiles.map(f => new java.net.URI(f).getPath)
+      assert(files.nonEmpty, "the result has no files")
+      val elsewhere = files.filterNot(_.startsWith(s"$sink/"))
+      assert(elsewhere.isEmpty,
+        s"read outside the sink: ${elsewhere.take(3).mkString(", ")}")
+      val rows = got.collect().toSeq
+      assert(rows == spark.read.parquet(sink).collect().toSeq)
+      assert(rows == Rbac.runAs(spark, role, setup, sql).collect().toSeq)
+    }
+  }
+
+  test("query runner: a denied query raises and writes nothing") {
+    val out = tmpDir("results_denied")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      QueryRunner.run(spark, Rbac.core, setup, "sample",
+        ReferenceQueries.sampleWithItems(setup), out)
+    }
+    assert(!new java.io.File(s"$out/core").exists())
+  }
+
   test("string-results mode mirrors Athena's all-VarCharValue result model") {
     val out = tmpDir("results_str")
     QueryRunner.run(spark, Rbac.core, setup, "by_endpoint",
