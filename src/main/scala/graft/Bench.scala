@@ -82,24 +82,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.defaultCpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
     // Tuning experiments: SPARK_GRAFT_CONF="k=v;k=v" overlays any conf.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val overlay = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(';')).flatMap { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
+          case _ => None
+        }
+      }.toMap
+    val spark = Session.local(cpus, overlay)
 
     // Scheduled-job counter (round-16 verdict item 2: make the per-job
     // scheduling floor machine-readable). Each timed run's job count
@@ -262,7 +255,7 @@ object Bench {
     val jobFloor = {
       val reps = (1 to 15).map { _ =>
         val t0 = System.nanoTime()
-        spark.sparkContext.parallelize(1 to cpus.toInt, cpus.toInt).count()
+        spark.sparkContext.parallelize(1 to cpus, cpus).count()
         (System.nanoTime() - t0) / 1e9
       }.sorted
       reps(reps.length / 2)

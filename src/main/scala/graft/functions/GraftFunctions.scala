@@ -29,7 +29,7 @@ object GraftFunctions {
       name, b, "built-in")
   }
 
-  /** Builder-time extension: SparkSession.builder().withExtensions(...) */
+  /** Builder-time extension; [[graft.sql.GraftSqlExtensions]] applies it. */
   class Installer extends (SparkSessionExtensions => Unit) {
     def apply(e: SparkSessionExtensions): Unit = fns.foreach { case (name, b) =>
       e.injectFunction((

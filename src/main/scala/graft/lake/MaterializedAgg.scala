@@ -133,20 +133,20 @@ object MaterializedAgg {
       "output names must not use the reserved _mv_ prefix")
   }
 
-  private[lake] val KeyCol = "_mv_key"
-  private[lake] val BucketCol = "_mv_bucket"
+  private val KeyCol = "_mv_key"
+  private val BucketCol = "_mv_bucket"
   // partials sidecar columns
-  private[lake] val DirCol = "_mv_dir"
-  private[lake] val AKeyCol = "_mv_akey"
-  private[lake] val ABucketCol = "_mv_abucket"
+  private val DirCol = "_mv_dir"
+  private val AKeyCol = "_mv_akey"
+  private val ABucketCol = "_mv_abucket"
 
-  private[lake] def nnName(sumName: String) = s"_mv_nn_$sumName"
+  private def nnName(sumName: String) = s"_mv_nn_$sumName"
 
   private def fs(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def mvMeta(root: String) = new Path(root, "_mv")
-  private[lake] def auxRoot(mvRoot: String): String =
+  private def auxRoot(mvRoot: String): String =
     new Path(mvRoot, "_mvpartials").toString
 
   /** Composite group key, INJECTIVE by construction: each group value
@@ -154,7 +154,7 @@ object MaterializedAgg {
     * with `|`. Length prefixes make the encoding self-delimiting, so
     * no group value can collide two distinct tuples — no control-char
     * sentinels needed (round-11 advice items 2 and 3). */
-  private[lake] def keyExpr(spec: MvSpec): Column = {
+  private def keyExpr(spec: MvSpec): Column = {
     val comps = spec.groupBy.map { c =>
       val s = col(c).cast("string")
       when(s.isNull, lit("n"))
@@ -163,7 +163,7 @@ object MaterializedAgg {
     concat(comps.flatMap(c => Seq(lit("|"), c)).tail: _*)
   }
 
-  private[lake] def bucketExpr(nBuckets: Int): Column =
+  private def bucketExpr(nBuckets: Int): Column =
     pmod(xxhash64(col(KeyCol)), lit(nBuckets.toLong))
 
   /** The base directory a row came from, as the manifest-relative dir
@@ -192,7 +192,7 @@ object MaterializedAgg {
   /** Signed partial aggregate of `rows`: +1 = additions, -1 =
     * retractions. Output: group cols, sums (cast to `types`), per-sum
     * signed non-null counts, signed count. */
-  private[lake] def aggFrame(
+  private def aggFrame(
       rows: DataFrame, spec: MvSpec, types: Seq[DataType],
       sign: Int): DataFrame = {
     val sumAggs = spec.effSums.zip(types).map { case ((n, e), t) =>
@@ -236,7 +236,7 @@ object MaterializedAgg {
     * `rows` gets a sidecar row even when all sketch inputs are NULL
     * (empty array), so group-level re-derivation can never mistake
     * "all values deleted" for "no information". */
-  private[lake] def partialsFrame(
+  private def partialsFrame(
       rows: DataFrame, spec: MvSpec, mmTypes: Seq[DataType],
       nBuckets: Int): DataFrame = {
     val mmAggs = (spec.mins.map { case (n, e) => (n, e, true) } ++
@@ -281,7 +281,7 @@ object MaterializedAgg {
     * estimate. The sidecar is metadata-sized (|groups × directories
     * they span| rows, sketch arrays ≤ k longs), so this scan is the
     * incremental analog of reading the manifest, not the table. */
-  private[lake] def rollup(
+  private def rollup(
       aux: DataFrame, spec: MvSpec, keys: DataFrame): DataFrame = {
     val aggs = spec.mins.map { case (n, _) => min(col(n)).as(n) } ++
       spec.maxs.map { case (n, _) => max(col(n)).as(n) } ++
@@ -305,10 +305,10 @@ object MaterializedAgg {
     * current view full-outer-joined with the signed delta (ring columns
     * added groupwise, group columns picked from whichever side has the
     * key), sidecar-maintained columns overwritten from the rollup for
-    * affected groups, and the `_mv_op` tombstone derivation. ONE copy —
-    * [[refresh]] commits it and [[MvProf]] replays it stage-timed, so
-    * the profile can never drift from the real plan. */
-  private[lake] def mergedViewChanges(
+    * affected groups, and the `_mv_op` tombstone derivation, as
+    * [[refresh]] commits it (stage timings: OPTIMIZATION_r19.md,
+    * Item 2). */
+  private def mergedViewChanges(
       current: DataFrame, delta: DataFrame, roll: Option[DataFrame],
       spec: MvSpec, types: Seq[DataType]): DataFrame = {
     val c = current.as("c")
@@ -359,7 +359,7 @@ object MaterializedAgg {
 
   // ---- spec + applied-version sidecar ------------------------------
 
-  private[lake] def writeSideFile(
+  private def writeSideFile(
       spark: SparkSession, root: String, name: String, content: String,
       overwrite: Boolean): Unit = {
     val f = fs(spark, root)
@@ -376,7 +376,7 @@ object MaterializedAgg {
           "(concurrent maintainer? the contract is single-maintainer)")
   }
 
-  private[lake] def readSideFile(
+  private def readSideFile(
       spark: SparkSession, root: String, name: String): Option[String] = {
     val f = fs(spark, root)
     val p = new Path(mvMeta(root), name)
@@ -403,7 +403,7 @@ object MaterializedAgg {
 
   /** Base version that view version `v` reflects (None: no marker —
     * either never initialized or a pre-marker crash). */
-  private[lake] def appliedAt(
+  private def appliedAt(
       spark: SparkSession, mvRoot: String, v: Int): Option[Int] =
     readSideFile(spark, mvRoot, f"applied-v$v%08d").map(_.trim.toInt)
 

@@ -2542,8 +2542,7 @@ object SnapshotTable {
     // batches are view-slice- and sidecar-sized by construction)
     // caches BEFORE calling and keeps the lifecycle.
     val changes = changes0
-    val touchedKeys = profT("validate_probe") {
-      validateAndProbe(changes, key, Some(opCol), partitionBy) }
+    val touchedKeys = validateAndProbe(changes, key, Some(opCol), partitionBy)
     withConflictRetry {
       val base = manifestAt(spark, root, -1)
       base.rowKey.headOption.foreach(k0 => require(k0 == key,
@@ -2742,17 +2741,6 @@ object SnapshotTable {
     * `untouched` from V's entries (so a disjoint concurrent commit's
     * changes are CARRIED FORWARD, not clobbered), and attempts to
     * commit exactly V+1. A lost rename race just loops. */
-  /** Stage timer for commit-path diagnostics: prints to stderr when
-    * GRAFT_COMMIT_PROF is set, else zero-cost pass-through. */
-  @inline private def profT[T](name: String)(body: => T): T =
-    if (sys.env.contains("GRAFT_COMMIT_PROF")) {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[commitprof] $name=${(System.nanoTime() - t0) / 1e9}%.3f")
-      r
-    } else body
-
   private def commitRewrite(
       spark: SparkSession, root: String, newRows: DataFrame,
       partitionBy: Seq[String], baseManifest: Option[Manifest],
@@ -2849,9 +2837,8 @@ object SnapshotTable {
           (partitionBy.map(col) ++ clusterBy.map(c =>
             col(colMapping.getOrElse(c, c)))): _*)
       }
-    profT("staging_write") { layout
-      .write.mode("overwrite").partitionBy(stagingCols: _*)
-      .parquet(staging.toString) }
+    layout.write.mode("overwrite").partitionBy(stagingCols: _*)
+      .parquet(staging.toString)
     f.mkdirs(new Path(root, "data"))
     // walk the nested staging layout: level j's directories are
     // `_graft_pJ=<escaped>`; a LEAF (deepest level) holds one tuple's
@@ -2867,14 +2854,14 @@ object SnapshotTable {
             .map { case (k, d) => (s"$frag/$k", d) }
         }
     }
-    val moved = profT("moves") { leaves(staging, 0).zipWithIndex.map { case ((k, src), i) =>
+    val moved = leaves(staging, 0).zipWithIndex.map { case ((k, src), i) =>
       val dir = s"data/p${System.nanoTime()}-$i-" +
         java.util.UUID.randomUUID()
       if (!f.rename(src, new Path(root, dir)))
         throw new java.io.IOException(
           s"cannot move staged partition $src into $dir")
       (k, dir)
-    } }
+    }
     f.delete(staging, true)
     if (crashBeforeCommit)
       throw new java.io.IOException(
@@ -2884,11 +2871,11 @@ object SnapshotTable {
     // the move loop above) — this is what lets [[optimize]] plan
     // candidates from the manifest alone at 100 TB instead of listing
     // every partition per call (round-11 verdict item 8).
-    val newSizes: Seq[(String, Long)] = profT("census") { moved.flatMap { case (_, dir) =>
+    val newSizes: Seq[(String, Long)] = moved.flatMap { case (_, dir) =>
       f.listStatus(new Path(root, dir)).toSeq
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .map(st => (s"$dir/${st.getPath.getName}", st.getLen))
-    } }
+    }
     // Per-file ROW COUNTS of the just-written files (round 15, `#n`
     // manifest lines): driver-side FOOTER reads of only the fresh
     // files — one seek each, no data pages, same cost class as the
@@ -2898,7 +2885,7 @@ object SnapshotTable {
     // query time. A file whose footer read fails gets no line (the
     // metadata-aggregate path requires full coverage and falls back to
     // the data scan), never a wrong count.
-    val newRowCounts: Seq[(String, Long)] = profT("footers") {
+    val newRowCounts: Seq[(String, Long)] = {
       val conf = spark.sessionState.newHadoopConf()
       newSizes.flatMap { case (rel, _) =>
         try {
@@ -2932,7 +2919,7 @@ object SnapshotTable {
           s"census file $file is not under any just-written directory"))
     }
     val (newStats: Seq[FileStat],
-         newSketches: Seq[(String, String, String)]) = profT("stats") {
+         newSketches: Seq[(String, String, String)]) =
       if ((statsCols.isEmpty && lookupCols.isEmpty) || moved.isEmpty)
         (Nil, Nil)
       else {
@@ -2994,7 +2981,6 @@ object SnapshotTable {
           (stats, sketches)
         }
       }
-    }
     // caller's publication gate (see [[applyChanges]]): every Spark
     // job of this attempt is done; only the manifest rename follows
     publishGate()
@@ -3004,10 +2990,9 @@ object SnapshotTable {
       .filter(e => touchedKeys(e._1)).toSet
     var raceRetries = 0
     while (true) {
-      val latestV = profT("versions_list") {
-        versions(spark, root).lastOption.getOrElse(0) }
-      val latestM = profT("manifest_read") {
-        if (latestV == 0) None else Some(readManifest(spark, root, latestV)) }
+      val latestV = versions(spark, root).lastOption.getOrElse(0)
+      val latestM =
+        if (latestV == 0) None else Some(readManifest(spark, root, latestV))
       val latest = latestM.map(_.entries).getOrElse(Nil)
       // A partial commit RECORDS THE UNION of the table's schema and
       // the rewrite's: untouched directories may carry a wider vintage
@@ -3077,8 +3062,8 @@ object SnapshotTable {
         latestM.map(_.droppedPhys).getOrElse(Nil), lookupCols,
         newSketches, checks, notNull)
       try {
-        profT("manifest_commit") { commitManifest(spark, root, v, payload,
-          if (asDelta) Some(latestV) else None, removed) }
+        commitManifest(spark, root, v, payload,
+          if (asDelta) Some(latestV) else None, removed)
         if (asDelta && v % CheckpointEvery == 0) {
           // fold in-memory from state already in hand — no re-read
           val untouched = latest.filterNot(e => touchedKeys(e._1))

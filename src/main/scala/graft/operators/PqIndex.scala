@@ -10,8 +10,9 @@ import graft.functions.VectorFunctions.vec_dot
 /** Persisted product-quantization index (round 18): the PQ codes and
   * the LSH-learned codebook, built once per corpus and SERVED by the
   * ADC search — the same persisted-index pattern as [[AnnIndex]] (IVF)
-  * and [[InvertedIndex]] (BM25). S09Prof pinned where s09's second
-  * went: re-deriving the codebook per run — a 64-dim explode through
+  * and [[InvertedIndex]] (BM25). The round-18 s09 profile (BENCH_NOTES.md,
+  * "Round 18: t14 / s09 profiled") pinned where s09's second went:
+  * re-deriving the codebook per run — a 64-dim explode through
   * two corpus-sized hash aggregates — cost 0.92 s of a 1.16 s total at
   * sf0.1, and an 8-decimal-column reshape of the same aggregate did
   * not move it (the per-element decimal arithmetic, not the row

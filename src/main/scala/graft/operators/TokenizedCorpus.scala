@@ -268,8 +268,8 @@ object TokenizedCorpus {
           // guide §1.2): the commit executes its input twice — the
           // tok-range clustering's sampling pass, then the write — and
           // each execution of the UNCACHED union re-ran its two
-          // aggregates and three pf scans (MaintProf: staging_write
-          // 1.3 s of the 2.7 s commit). The sampling pass now doubles
+          // aggregates and three pf scans (OPTIMIZATION_r20.md,
+          // Item 6: staging_write 1.3 s of the 2.7 s commit). The sampling pass now doubles
           // as the cache fill and the write reads memory. Bounded:
           // changed-partitions-sized, same class as pf itself.
           val rows = allRows(pf, partitionBy).cache()

@@ -419,14 +419,7 @@ object Curate {
     val outDir = args.drop(1).headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft-curate").toString)
     val rebalance = args.contains("rebalance")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val report = run(spark, sfDir, outDir, rebalanceMix = rebalance,
       clusterDedup = !args.contains("pairwise"),
       semanticDedup = args.contains("semantic"))

@@ -214,9 +214,10 @@ object Search {
     * scores. When the pipeline was tokenize-dominated that exactness
     * premium read as ~5x (round-10 window); after the round-15 shave
     * moved the term filter inside the explode, scoring is a minority
-    * stage and the premium is ~10-25% (round-15 clean window,
-    * `Bm25FastBench`: batched 1.16 exact vs 1.02 fast, index-served
-    * batch 0.83 vs 0.63, inline single at parity) — kept because
+    * stage and the premium is ~10-25% (round-15 clean window:
+    * batched 1.16 exact vs 1.02 fast, index-served batch 0.83 vs
+    * 0.63, inline single at parity; the round-16 re-measure is in
+    * BENCH_NOTES.md, "Float fast-path BM25") — kept because
     * production retrieval needs RANKS and the double path stays fully
     * inside whole-stage codegen with no wide decimals. Pinned
     * RANK-IDENTICAL (top-k set + order) to the gated exact path at
@@ -517,9 +518,10 @@ object Search {
     // sf0.1) is gone, replaced by one postings-sized exchange paid
     // once at cache fill. The cache pins the partitioning (cached
     // plans keep their output partitioning), which also keeps the
-    // post-exchange scoring parallel — see Bm25BatchProf: the same
-    // repartition UNCACHED lets AQE coalesce the small exchange to one
-    // partition and serialize the decimal ladders (the t36 finding).
+    // post-exchange scoring parallel — see OPTIMIZATION_r20.md, Item
+    // 5: the same repartition UNCACHED lets AQE coalesce the small
+    // exchange to one partition and serialize the decimal ladders (the
+    // t36 finding: 1.56 s vs 0.73 s).
     val postings = TokenizedCorpus.postingsForTerms(spark, tokRoot, terms)
       .select(col("doc_id"), col("dl"), col("tok"), col("tf"))
       .repartition(col("doc_id"))
@@ -663,9 +665,9 @@ object Search {
     // satisfies BOTH the postings aggregate's (doc_id, dl, tok)
     // clustering AND the score aggregate's (query_id, doc_id) — the
     // postings-agg exchange and the fanout-sized DECIMAL-partials
-    // score exchange are both gone (Bm25BatchProf: t35 15.0 MB → 3.2
-    // MB shuffled, 1.34 s → 0.91 s; the tokenize stays in the
-    // pre-exchange scan stage, so parallelism is unchanged).
+    // score exchange are both gone (OPTIMIZATION_r20.md, Item 5: t35
+    // 15.0 MB → 3.2 MB shuffled, 1.34 s → 0.91 s; the tokenize stays in
+    // the pre-exchange scan stage, so parallelism is unchanged).
     val postings = base
       .select(col("doc_id"), col("dl"),
         explode(filter(col("toks"), _.isin(terms: _*))).as("tok"))
@@ -677,29 +679,6 @@ object Search {
     // join, so two queries sharing a term cannot double-count it
     val dfStats = postings.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     bm25ScoreBatch(postings, q, dfStats, corpus, k)
-  }
-
-  /** Batched FLOAT fast path over a corpus — [[bm25BatchOver]]'s exact
-    * pipeline with [[bm25ScoreBatchFast]] scoring; rank-pinned equal
-    * to the exact batch in `Bm25FastSpec`. */
-  def bm25BatchFastOver(
-      docs: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("query_id"), col("tok")).distinct()
-    val terms = workloadTerms(queries)
-    val base = tokenized(docs)
-      .select(col("doc_id"), col("dl"), col("toks"))
-      .cache()
-    val corpus = base.agg(
-      count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
-    val postings = base
-      .select(col("doc_id"), col("dl"),
-        explode(filter(col("toks"), _.isin(terms: _*))).as("tok"))
-      .repartition(col("doc_id")) // one-exchange pipeline, see exact twin
-      .groupBy(col("doc_id"), col("dl"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-      .cache() // two consumers: df stats + the query join (see bm25)
-    val dfStats = postings.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    bm25ScoreBatchFast(postings, q, dfStats, corpus, k)
   }
 
   /** Deterministic salient-term extraction for retrieval-based

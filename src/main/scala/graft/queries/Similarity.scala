@@ -669,7 +669,8 @@ object Similarity {
       // partitioning. CurationOpsSpec grades recall@10 against the
       // exact s01 baseline; the hash gate pins determinism, not recall.
       //
-      // 100 TB shape (round 18, S09Prof): the codebook and codes are
+      // 100 TB shape (round 18; profile in BENCH_NOTES.md, "Round 18:
+      // t14 / s09 profiled"): the codebook and codes are
       // SERVED from the persisted PQ index ([[graft.operators
       // .PqIndex]] — built once per corpus, rebuilt cold under the
       // bench contract's `index_build.pq`). The profile pinned the
@@ -972,7 +973,7 @@ object Similarity {
   val s12_embed_covariance = Q(
     "s12_embed_covariance",
     (s, dir) => {
-      // ROUND-17 shape (profiled, S12Prof at sf0.1: scan 0.22s, the
+      // ROUND-17 shape (BENCH_NOTES.md "Round 17", sf0.1: scan 0.22s, the
       // old nested-transform explode 0.61s, decimal-vs-long agg delta
       // 0.04s — the cost was EXPLODE ROW VOLUME, not decimal sums or a
       // codegen fallback): the Gram pass is a partition-local kernel

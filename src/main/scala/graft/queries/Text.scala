@@ -587,7 +587,8 @@ object Text {
       // the t13 Mitchell exact-integer ladder (monotone in N/df, every
       // step exact 64-bit math), so score_n9 = tf * idf_n9 is a BIGINT
       // and ranking is bit-reproducible on any engine/partitioning.
-      // Physical shape (round 18, T14Prof): the (doc, tok, tf) rows are
+      // Physical shape (round 18; profile in BENCH_NOTES.md, "Round
+      // 18: t14 / s09 profiled"): the (doc, tok, tf) rows are
       // READ from the pristine tokenized corpus — the SAME table the
       // BM25 family serves from — instead of re-tokenizing and
       // re-aggregating per run (the profile pinned that head at ~2x the

@@ -12,12 +12,7 @@ import org.apache.spark.sql.functions._
   * whenever dedup runtime grows faster than the corpus. */
 object BucketDiag {
   def main(args: Array[String]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.builder
-      .master("local[32]")
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.Session.local()
     for (d <- args) {
       val b = graft.queries.Dedup.bandedWithSigFromText(
         s.read.parquet(s"$d/documents.parquet")

@@ -1,25 +1,35 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
-/** Dev utility: print schema + formatted physical plan for a query or a raw
-  * parquet path. Used to iterate on plans (pushdown, broadcast, codegen
-  * spans) — not part of the driver contract.
+/** Dev utility: plans and timings of one query, of every query, or a
+  * look into a parquet file. Used to iterate on plans (pushdown,
+  * broadcast, codegen spans) — not part of the driver contract.
   *
   * Usage:
-  *   graft.tools.Explain <sfDir> <queryName>   — explain a SparkEntry query
+  *   graft.tools.Explain <sfDir> <queryName>   — final AQE plan of a
+  *                                               SparkEntry query
+  *   graft.tools.Explain time <sfDir> <queryName> [n]
+  *                                             — n (default 3) timed
+  *                                               materializations
+  *   graft.tools.Explain all <sfDir> <outFile> — every query's final plan
   *   graft.tools.Explain read <parquetPath>    — schema + 3 rows of a file
   */
 object Explain {
+  /** Drive df's OWN plan to completion without materializing rows on
+    * the driver, then return the final AQE plan. count() executes a
+    * DIFFERENT plan (an aggregate over this one), leaving df's
+    * AdaptiveSparkPlan un-finalized (isFinalPlan=false), and collect()
+    * would pull unbounded pair lists (d04/d13/d15) into driver memory.
+    * A distributed count over the executed RDD finalizes AQE with zero
+    * driver-side rows. */
+  private def finalPlan(df: DataFrame): String = {
+    df.queryExecution.toRdd.count()
+    df.queryExecution.executedPlan.toString
+  }
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     args match {
       case Array("read", path) =>
         val df = spark.read.parquet(path)
@@ -39,17 +49,8 @@ object Explain {
           " section per SparkEntry.queries entry (" + flagship.size +
           " queries) plus the two unregistered fast paths.\n")
         flagship.foreach { name =>
-          val df = graft.SparkEntry.queries(name)(spark, sfDir)
-          // Drive df's OWN plan to completion without materializing rows
-          // on the driver: count() executes a DIFFERENT plan (an
-          // aggregate over this one), leaving df's AdaptiveSparkPlan
-          // un-finalized (isFinalPlan=false), and collect() would pull
-          // unbounded pair lists (d04/d13/d15) into driver memory. A
-          // distributed count over the executed RDD finalizes AQE with
-          // zero driver-side rows.
-          df.queryExecution.toRdd.count()
           sb.append(s"\n## $name\n\n```\n")
-          sb.append(df.queryExecution.executedPlan.toString)
+          sb.append(finalPlan(graft.SparkEntry.queries(name)(spark, sfDir)))
           sb.append("```\n")
         }
         // Non-registered production shapes: the float fast paths (rank-
@@ -59,26 +60,34 @@ object Explain {
         val docs = graft.core.Tables(spark, sfDir, "documents")
         val tokRoot = graft.core.IndexRoot.of(sfDir, "documents.parquet",
           "graft_tok_idx_v2")
-        val extras: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+        val extras: Seq[(String, DataFrame)] = Seq(
           "bm25Fast_inline" -> graft.queries.Search.bm25Fast(docs),
           "bm25FromTokenized_fast" -> graft.queries.Search
             .bm25FromTokenizedFast(spark, tokRoot))
         extras.foreach { case (name, df) =>
-          df.queryExecution.toRdd.count()
           sb.append(s"\n## $name (unregistered fast path)\n\n```\n")
-          sb.append(df.queryExecution.executedPlan.toString)
+          sb.append(finalPlan(df))
           sb.append("```\n")
         }
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(outFile), sb.toString)
         println(s"wrote $outFile")
+      case Array("time", sfDir, name, n @ _*) =>
+        // the full result through a noop sink, as Verify writes it: a
+        // count() would time a pruned plan (no final sort, aggregate
+        // outputs dropped). First iteration cold, the rest warm.
+        for (i <- 1 to n.headOption.fold(3)(_.toInt)) {
+          val t0 = System.nanoTime()
+          graft.SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          println(f"iter $i: ${(System.nanoTime() - t0) / 1e9}%.2fs")
+        }
       case Array(sfDir, name) =>
-        val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        df.printSchema()
-        df.explain("formatted")
+        println(finalPlan(graft.SparkEntry.queries(name)(spark, sfDir)))
       case _ =>
-        System.err.println(
-          "usage: Explain <sfDir> <query> | Explain read <path> | Explain all <sfDir> <out>")
+        System.err.println("usage: Explain <sfDir> <query> | " +
+          "Explain time <sfDir> <query> [n] | " +
+          "Explain all <sfDir> <out> | Explain read <path>")
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic sf1-SHAPED data generator (round-10 verdict item 3):
@@ -33,14 +33,7 @@ object GenScale {
     require(args.nonEmpty, "usage: GenScale <outDir> [factor]")
     val out = args(0)
     val factor = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val base = "/root/testdata/sf0.1"
 
     def write(df: DataFrame, name: String, parts: Int): Unit = {

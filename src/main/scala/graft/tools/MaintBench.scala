@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Maintenance-path + Zipf-retrieval decade measurements (round-12
@@ -56,16 +55,7 @@ object MaintBench {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: MaintBench <sfDir> [<sfDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import graft.lake.{MaterializedAgg, SnapshotTable}
     import graft.lake.MaterializedAgg.MvSpec
     import graft.operators.TokenizedCorpus

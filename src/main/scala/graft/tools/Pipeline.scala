@@ -195,15 +195,8 @@ object Pipeline {
       .map(_.split(",").toSeq)
       .getOrElse(Seq("2026-01-11", "2026-01-12"))
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"$workDir/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(
+      conf = Map("spark.sql.warehouse.dir" -> s"$workDir/warehouse"))
 
     val raw = s"$workDir/raw"
     val cfg = IngestConfig()
